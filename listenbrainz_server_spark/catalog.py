@@ -85,9 +85,8 @@ _CACHE_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_MAX_MB", "512")) * 1024
 # Env-overridable (ADVICE r14, mirroring _CACHE_MAX_BYTES): the 1 MiB
 # default was tuned on THIS host's sf0.1 panel; different hardware or
 # scale factors re-tune via SPARK_GRAFT_CACHE_PARTITION_KB without a
-# code change. Re-validated on the 8-core leg in r15 (mirrored A/B,
-# OPTIMIZATION_r15.md) — the defaultParallelism cap already shrinks
-# the block count on low-core sessions.
+# code change. The defaultParallelism cap already shrinks the block
+# count on low-core sessions.
 _CACHE_PARTITION_BYTES = (
     int(os.environ.get("SPARK_GRAFT_CACHE_PARTITION_KB", "1024")) * 1024
 )

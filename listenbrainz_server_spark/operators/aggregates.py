@@ -73,10 +73,5 @@ def combine_aggregates(
     return unioned.groupBy(*keys).agg(*aggs)
 
 
-def sum_with_default(col: str, default: Column, alias: str) -> Column:
-    """sum(coalesce(col, default)) (year_in_music/listening_time.py:20-27)."""
-    return F.sum(F.coalesce(F.col(col), default)).alias(alias)
-
-
 def distinct_count(df: DataFrame, keys: Sequence[str], what: str, alias: str) -> DataFrame:
     return df.groupBy(*keys).agg(F.countDistinct(what).alias(alias))

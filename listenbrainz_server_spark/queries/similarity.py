@@ -343,10 +343,12 @@ def v_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from listenbrainz_server_spark.operators.similarity import (
         _hadoop_delete,
+        _list_column,
+        _matrix,
         _scratch_root,
         ivfpq_topk,
         opq_train,
@@ -359,14 +361,14 @@ def v_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rm = np.array(R)
 
     def rot(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.vstack(pdf["embedding"].to_numpy()).astype("float64")
-            yield pd.DataFrame(
+            V = _matrix(batch.column("embedding"))
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "embedding": list((V @ Rm).astype("float32")),
+                    "vec_id": batch.column("vec_id"),
+                    "embedding": _list_column((V @ Rm).astype("float32")),
                 }
             )
 
@@ -390,7 +392,7 @@ def v_opq_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         emb.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        ).mapInPandas(rot, "vec_id bigint, embedding array<float>").write.parquet(
+        ).mapInArrow(rot, "vec_id bigint, embedding array<float>").write.parquet(
             scratch
         )
         rotated = spark.read.parquet(scratch)
@@ -436,9 +438,9 @@ def v_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Multi-probe sign-LSH ANN top-k: each query probes its own signature
 # bucket plus all Hamming-distance-1 buckets — the standard recall
-# boost without growing the bucket count. Pure column expressions
-# (zero Python workers); fully SQL-expressible, so the oracle checks
-# it exactly.
+# boost without growing the bucket count. Buckets are scored by a
+# cogrouped numpy matmul; the fixed 8-bit signature keeps it fully
+# SQL-expressible, so the oracle checks it exactly.
 # --------------------------------------------------------------------------
 def _lsh_multiprobe_sql() -> str:
     bit_exprs = []
@@ -488,20 +490,15 @@ def _lsh_multiprobe_sql() -> str:
     "v_lsh_multiprobe",
     _lsh_multiprobe_sql(),
     doc=f"multi-probe sign-LSH ANN top-5 (Hamming-1 probe fan-out over "
-    f"{_SIG_BITS}-bit buckets, pure-expression exact re-rank)",
+    f"{_SIG_BITS}-bit buckets, exact in-bucket cosine re-rank)",
 )
 def v_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from listenbrainz_server_spark.operators.similarity import lsh_multiprobe_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # vectorized=False: with the fixture-pinned 8-bit signature the
-    # buckets hold a handful of rows, so the pure-expression re-rank
-    # beats Arrow worker spin-up (measured 2.6 vs 2.9 s at sf0.1); the
-    # corpus-sized callers (v_mmr_rerank's candidate stage) take the
-    # vectorized default instead.
     return lsh_multiprobe_topk(
         emb, "vec_id", "embedding", dims=_DIMS, k=5, sig_bits=_SIG_BITS,
-        n_flip=1, vectorized=False,
+        n_flip=1,
     )
 
 
@@ -1768,8 +1765,10 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def v_opq_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
+    import pyarrow as pa
 
     from listenbrainz_server_spark.operators.similarity import (
+        _matrix,
         _pq_reconstruct,
         opq_train,
         pq_train_codebooks,
@@ -1789,17 +1788,18 @@ def v_opq_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bp, Bo = np.array(books_pq), np.array(books_opq)
 
     def recon_errors(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.vstack(pdf["vec"].to_numpy()).astype("float64")
-            _, e_pq = _pq_reconstruct(V, Bp, m)
-            _, e_opq = _pq_reconstruct(V @ Rm, Bo, m)
-            yield pd.DataFrame({"e_pq": e_pq, "e_opq": e_opq})
+            V = _matrix(batch.column("vec"))
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "e_pq": _pq_reconstruct(V, Bp, m)[1],
+                    "e_opq": _pq_reconstruct(V @ Rm, Bo, m)[1],
+                }
+            )
 
-    errs = unit.mapInPandas(recon_errors, "e_pq double, e_opq double")
+    errs = unit.mapInArrow(recon_errors, "e_pq double, e_opq double")
     agg = errs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
         F.avg("e_pq").alias("mse_pq"),

@@ -18,7 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# The host's cores; SPARK_GRAFT_CPUS overrides per deployment.
+_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 
 
 def get_session(
@@ -30,7 +31,7 @@ def get_session(
     """Build (or fetch) the engine's SparkSession.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[$SPARK_GRAFT_CPUS]``, else ``local[<host cores>]``.
     """
     cpus = int(_DEFAULT_CPUS)
     builder = (
@@ -66,35 +67,6 @@ def get_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def cluster_profile(executors: int = 1000, cores: int = 5, mem_gb: int = 16) -> dict[str, str]:
-    """Config deltas for a real multi-executor deployment at the
-    100 TB scale this engine targets (local[] testing uses the
-    defaults in get_session; spark-submit merges these on top).
-
-    Sizing rationale:
-    - shuffle.partitions ≈ 2-3× total cores so AQE coalesces DOWN
-      (splitting up is impossible); at 100 TB inputs this also keeps
-      post-shuffle partitions under ~256 MB for a ~20 TB shuffle.
-    - maxPartitionBytes 256m → ~400k input splits for 100 TB, fine
-      for a 1000-executor scheduler.
-    - Kryo + compressed broadcasts for the dimension-join path.
-    """
-    total_cores = executors * cores
-    return {
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(cores),
-        "spark.executor.memory": f"{mem_gb}g",
-        "spark.sql.shuffle.partitions": str(total_cores * 2),
-        "spark.sql.files.maxPartitionBytes": "256m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
-        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
-        "spark.sql.autoBroadcastJoinThreshold": "64m",
-        "spark.shuffle.service.enabled": "true",
-        "spark.dynamicAllocation.enabled": "true",
-        "spark.dynamicAllocation.maxExecutors": str(executors),
-    }
 
 
 def stop_session() -> None:

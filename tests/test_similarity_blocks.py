@@ -8,12 +8,18 @@ unchanged".
 
 from __future__ import annotations
 
+import warnings
+
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from listenbrainz_server_spark.catalog import load_table
 from listenbrainz_server_spark.operators.dedup import connected_components, shingle_index
 from listenbrainz_server_spark.operators.similarity import (
+    _matrix,
+    _topk_rows,
     brute_force_topk,
     neardup_pairs,
 )
@@ -111,6 +117,69 @@ def test_connected_components_warns_when_not_converged(spark):
     # And with enough rounds it converges to a single min-label group.
     out = connected_components(nodes, pairs, max_iter=10)
     assert {r.group_id for r in out.collect()} == {0}
+
+
+def test_connected_components_fixpoint_on_last_round_converges(spark):
+    """The 6-node path reaches its contracted fixpoint on round 4. A
+    contracted round that changes nothing is a plain-rule fixpoint, so
+    with max_iter=4 the result is converged and no warning may fire."""
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "id_a long, id_b long"
+    )
+    stats: dict = {}
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        out = connected_components(nodes, pairs, max_iter=4, stats=stats)
+    assert stats["rounds"] == 4
+    assert {r.group_id for r in out.collect()} == {0}
+
+
+def _topk_rows_by_full_sort(scores, ids, k):
+    """Reference for ``_topk_rows``: a full per-row lexsort."""
+    rows, cols = [], []
+    for i, row in enumerate(scores):
+        key = np.where(np.isnan(row), -np.finfo("float64").max, row)
+        order = np.lexsort((ids, -key))[:k]
+        order = order[key[order] > -np.inf]
+        rows += [i] * len(order)
+        cols += list(order)
+    return np.array(rows, dtype="int64"), np.array(cols, dtype="int64")
+
+
+def test_topk_rows_matches_full_sort_with_wide_ties():
+    """The kernel partitions each row to its k+32 best cells; a
+    rounded-score tie wider than that margin must fall back to the
+    full-row order (score desc, id asc). Also covers self exclusion
+    (-inf), NaN ranking last, rows with fewer than k candidates, and
+    string ids."""
+    rng = np.random.default_rng(7)
+    k, n_c = 5, 120
+    ids = rng.permutation(n_c) * 3
+    scores = np.round(rng.random((8, n_c)), 3)
+    scores[0] = 0.5  # one tie 120 wide: far past k + 32
+    scores[1, :100] = 0.9  # the top-k tie alone spans 100 cells
+    scores[2, ::2] = -np.inf  # self-style exclusions
+    scores[3] = -np.inf
+    scores[3, [4, 9]] = 0.1  # only 2 candidates for k = 5
+    scores[4, :50] = np.nan
+    np.fill_diagonal(scores, -np.inf)
+    for ids_ in (ids, ids.astype(str).astype(object)):
+        got = _topk_rows(scores, ids_, k)
+        want = _topk_rows_by_full_sort(scores, ids_, k)
+        assert all(np.array_equal(g, w) for g, w in zip(got, want))
+    rows, cols = _topk_rows(scores, ids, k)
+    assert list(cols[rows == 0]) == [c for c in np.argsort(ids) if c != 0][:k]
+    assert list(cols[rows == 3]) == sorted([4, 9], key=lambda c: ids[c])
+    assert not np.isneginf(scores[rows, cols]).any()
+
+
+def test_matrix_rejects_null_and_ragged_rows():
+    ok = pa.chunked_array([pa.array([[1.0, 2.0]]), pa.array([[3.0, 4.0]])])
+    assert _matrix(ok).tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    for bad in ([[1.0], [2.0, 3.0]], [[1.0, 2.0], None], [[1.0, None], [2.0, 3.0]]):
+        with pytest.raises(ValueError):
+            _matrix(pa.array(bad))
 
 
 def test_ivf_topk_recall_vs_brute_force(spark):

@@ -11,6 +11,7 @@ sweep, so a delta run cannot hide a flag an earlier full run raised.
 
 from __future__ import annotations
 
+import re
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -19,6 +20,10 @@ from listenbrainz_server_spark.queries import load_all
 from listenbrainz_server_spark.session import get_session
 
 SF = "/root/testdata/sf0.01"
+# Every JVM↔Python boundary node: ArrowEvalPython plus the *InPandas /
+# *InArrow family (MapInArrow, FlatMapGroupsInPandas,
+# FlatMapCoGroupsInArrow, FlatMapGroupsInPandasWithState, ...).
+PY_BOUNDARY = re.compile(r"\b(?:\w*In(?:Pandas|Arrow)(?:WithState)?|ArrowEvalPython)\b")
 
 
 def main() -> None:
@@ -33,8 +38,9 @@ def main() -> None:
         "# PLAN AUDIT — physical-plan scan of every registered query",
         "",
         "Flags: `BatchEvalPython` = row-at-a-time Python UDF (forbidden);",
-        "`CartesianProduct` = unbounded n×m; `ArrowEvalPython`/`MapInPandas`",
-        "= vectorized Python (allowed where declared); SMJ/BHJ = join picks.",
+        "`CartesianProduct` = unbounded n×m; `ArrowEvalPython`/`*InPandas`/",
+        "`*InArrow` = vectorized Python (allowed where declared); SMJ/BHJ =",
+        "join picks.",
         "",
         "Footnote (reconciled, VERDICT r11 #3): every row counts what",
         "its plan actually shows at audit time — `m_als_recommend`",
@@ -54,10 +60,8 @@ def main() -> None:
     if only:
         # Delta mode: start from the committed audit's rows, re-audit
         # only the requested names.
-        import re as _re
-
         prior = open("/root/repo/PLAN_AUDIT.md").read()
-        for m in _re.finditer(r"^\| (?!query \|)(\w+)(.*)$", prior, _re.M):
+        for m in re.finditer(r"^\| (?!query \|)(\w+)(.*)$", prior, re.M):
             rows[m.group(1)] = f"| {m.group(1)}{m.group(2)}"
         rows = {n: r for n, r in rows.items() if n in registry}
     for name in sorted(only) if only else sorted(registry):
@@ -77,7 +81,7 @@ def main() -> None:
         tree = plan.split("\n\n")[0]
         row_udf = tree.count("BatchEvalPython")
         cart = tree.count("CartesianProduct")
-        arrow = tree.count("ArrowEvalPython") + tree.count("MapInPandas")
+        arrow = len(PY_BOUNDARY.findall(tree))
         rows[name] = (
             f"| {name} | {tree.count('Exchange')} | "
             f"{tree.count('BroadcastHashJoin')} | {tree.count('SortMergeJoin')} | "
@@ -103,7 +107,6 @@ def main() -> None:
     # query's hot path (queries/ modules). The blessed exceptions are
     # driver-coordinated small-state ops documented inline.
     import pathlib
-    import re
 
     qdir = pathlib.Path("/root/repo/listenbrainz_server_spark/queries")
     collect_hits = []
