@@ -81,15 +81,7 @@ _CACHE_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_MAX_MB", "512")) * 1024
 # widest heavy stage (h_fresh_releases 2.27→2.53; still 2.1x better
 # than no-repartition's 5.36) while keeping a1_pricing_summary's win
 # (0.374 vs 1.320 off); panel totals 5.35/5.12/6.38/9.61.
-#
-# Env-overridable (ADVICE r14, mirroring _CACHE_MAX_BYTES): the 1 MiB
-# default was tuned on THIS host's sf0.1 panel; different hardware or
-# scale factors re-tune via SPARK_GRAFT_CACHE_PARTITION_KB without a
-# code change. The defaultParallelism cap already shrinks the block
-# count on low-core sessions.
-_CACHE_PARTITION_BYTES = (
-    int(os.environ.get("SPARK_GRAFT_CACHE_PARTITION_KB", "1024")) * 1024
-)
+_CACHE_PARTITION_BYTES = 1024 * 1024
 
 # (applicationId, abspath, mtime_ns) -> DataFrame
 _TABLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}

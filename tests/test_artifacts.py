@@ -55,17 +55,15 @@ def test_bench_full_covers_registry():
         f"({missing[:5]}…) — run tools/endround.py before the snapshot commit"
     )
     # r12 measurement-honesty shape: a full (non-merged) sweep must
-    # carry one untimed warm-up per query (the cold-start fix) and the
-    # trace-based window flag — their absence means the artifact was
-    # produced by a pre-r12 bench.py and its per-query numbers mix
-    # cold mapInPandas spin-up back in.
+    # carry one untimed warm-up per query (the cold-start fix) — its
+    # absence means the artifact was produced by a pre-r12 bench.py
+    # and its per-query numbers mix cold mapInPandas spin-up back in.
     if not bench.get("merged"):
         unwarmed = sorted(set(bench["queries"]) - set(bench.get("warmup_secs", {})))
         assert not unwarmed, (
             f"full sweep missing warm-ups for {len(unwarmed)} queries "
             f"({unwarmed[:5]}…)"
         )
-        assert "window_unstable" in bench, "full sweep missing window flag"
         assert "cold_start" in bench, "full sweep missing cold_start map"
 
 
@@ -124,91 +122,42 @@ def _resolves_in_package(fn: str) -> bool:
     return False
 
 
-def test_aba_anchor_exists():
-    """VERDICT r12 #1: cross-round headline comparisons must be
-    self-adjudicating — the endround A-B-A anchor (headline movers
-    re-run new→old→new against the prior round's snapshot in one
-    session) must exist and carry a verdict per mover. bench.py's
-    headline mode attaches this file to the artifact of record."""
-    path = os.path.join(REPO, "ABA_latest.json")
-    assert os.path.exists(path), (
-        "ABA_latest.json missing — run tools/endround.py (full pass)"
-    )
-    with open(path) as f:
-        aba = json.load(f)
-    assert aba.get("git_head") and aba.get("round"), "anchor lacks provenance"
-    for name, m in aba.get("movers", {}).items():
-        assert "ab_confirmed" in m, f"mover {name} lacks adjudication"
-        assert "legs" in m, f"mover {name} lacks leg readings"
-
-
 def test_headline_line_budget():
     """VERDICT r13 #1: the headline stdout line must stay under the
     driver's 2,000-char parse window — r13's line grew to 2,280 chars
-    by inlining the full A-B-A legs/ratios block and the driver
-    recorded parsed:null. Pins (a) that a realistic headline payload
-    with the SLIM aba attachment serializes under bench.LINE_BUDGET,
-    and (b) that an oversized payload (the r13 full-legs shape) is
-    trimmed back under budget with the omission recorded."""
+    and the driver recorded parsed:null. Pins (a) that a realistic
+    38-query headline payload serializes under bench.LINE_BUDGET
+    untouched, and (b) that an oversized payload is trimmed back under
+    budget with the omission recorded."""
     import importlib
     import sys
 
     sys.path.insert(0, REPO)
     bench = importlib.import_module("bench")
 
-    # (a) realistic current-shape payload: 38 headline queries, full
-    # probe trace, 8 movers in the slim verdict-only form.
-    qnames = [f"family_query_name_{i:02d}_topk" for i in range(38)]
-    out = {
-        "metric": "headline_total_sec",
-        "value": 123.45,
-        "unit": "sec",
-        "queries": {n: round(0.1 + i * 0.37, 2) for i, n in enumerate(qnames)},
-        "sf": 0.1,
-        "runs_per_query": 3,
-        "probe_secs": [0.409, 0.192],
-        "probe_ref_secs": 0.304,
-        "window_factor": 0.987,
-        "window_unstable": False,
-        "jvm_maturation": 2.13,
-        "probe_trace": [[i * 10, 0.3 + (i % 3) * 0.02] for i in range(6)],
-        "value_normalized": 74.43,
-        "value_comparable": 18.22,
-        "aba": {
-            "round": 14,
-            "head_moved": False,
-            "movers": {f"mover_query_name_{i}": False for i in range(8)},
-            "ref": "ABA_latest.json",
-        },
-    }
+    def payload(qnames):
+        return {
+            "metric": "headline_query_wall_seconds",
+            "value": 123.45,
+            "unit": "sec",
+            "queries": {n: round(0.1 + i * 0.37, 2) for i, n in enumerate(qnames)},
+            "sf": 0.1,
+            "runs_per_query": 3,
+            "value_comparable": 18.22,
+            "errors": {"x_failing_query": "AnalysisException: [X] " + "y" * 90},
+        }
+
+    # (a) realistic current-shape payload: 38 headline queries.
+    out = payload([f"family_query_name_{i:02d}_topk" for i in range(38)])
     line = bench.headline_line(dict(out))
     assert len(line) <= bench.LINE_BUDGET, len(line)
-    parsed = json.loads(line)
-    assert parsed["aba"]["movers"], "slim aba dropped from an in-budget line"
-    assert "queries" in parsed
+    assert json.loads(line) == out
 
-    # (b) the r13 failure shape: full legs/ratios inlined per mover.
-    fat = dict(out)
-    fat["aba"] = {
-        "round": 13,
-        "old_head": "1020b90df082beb02bf8bab420e03b19e33172a8",
-        "git_head": "08368e5021f66e11a76b5abe6a09ae5e5af84c4f",
-        "head_moved": False,
-        "movers": {
-            f"mover_query_name_{i}": {
-                "ab_confirmed": False,
-                "legs": {"new1": 2.43, "new2": 2.65, "old": 2.77},
-                "matched_ratio": 0.957,
-                "prior_round": 3.78,
-                "sweep_ratio": 0.582,
-                "this_sweep": 2.2,
-            }
-            for i in range(5)
-        },
-    }
-    line = bench.headline_line(fat)
+    # (b) ~150 long query names cannot fit: the per-query map goes.
+    fat = payload([f"a_rather_long_family_query_name_{i:03d}_topk" for i in range(150)])
+    line = bench.headline_line(dict(fat))
     assert len(line) <= bench.LINE_BUDGET, len(line)
     parsed = json.loads(line)
-    assert "trimmed" in parsed, "over-budget line must record what was dropped"
-    # value/value_normalized — the headline numbers — always survive.
-    assert parsed["value"] == 123.45 and parsed["value_normalized"] == 74.43
+    assert parsed["trimmed"] == ["queries"] and "queries" not in parsed
+    # The headline numbers always survive.
+    assert parsed["value"] == 123.45 and parsed["value_comparable"] == 18.22

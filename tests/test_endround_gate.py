@@ -165,33 +165,6 @@ def test_shared_module_change_reaches_nearly_every_query_module():
     )
 
 
-def test_aba_prior_fallback_resolves_the_r13_parsed_null_artifact():
-    """BENCH_r13.json is parsed:null (the r13 oversized-line defect).
-    The r14 anchor initially compared against an EMPTY prior map and
-    stamped 'no movers' — vacuous. _prior_query_map must fall back to
-    the committed full-sweep artifact at the prior round's recorded
-    head and return real per-query data, with a label that says the
-    fallback happened."""
-    import json
-
-    from endround import _prior_query_map
-
-    repo = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
-    prior_bench = os.path.join(repo, "BENCH_r13.json")
-    if not os.path.exists(prior_bench):
-        return  # artifact pruned — nothing to pin against
-    old_head = json.load(
-        open(os.path.join(repo, "CHECK_full_r13.json"))).get("git_head")
-    q, label = _prior_query_map(prior_bench, old_head)
-    assert len(q) >= 250, "fallback sweep should carry the registry"
-    assert label and "fallback" in label and old_head[:10] in label
-    # A parseable driver artifact must be preferred and carry no
-    # fallback label.
-    q12, label12 = _prior_query_map(
-        os.path.join(repo, "BENCH_r12.json"), old_head)
-    assert q12 and label12 is None
-
-
 def test_registry_files_live_in_the_queries_package():
     """_stale_names maps git-diff paths to registered names via
     inspect.getsourcefile + os.path.relpath. That only works if every

@@ -988,10 +988,10 @@ def test_probe_fanout_warning(spark):
     makes the plan itself the cost — the builder must warn and steer
     serving callers to the trained IVF tier. In-bound widths must stay
     silent (warnings are per-call, not per-row: building the Column is
-    driver-side)."""
+    driver-side). Uses the SQL-fragment form the production callers
+    pass; the Column form's values are pinned by
+    test_sql_fast_paths_match_column_paths."""
     import warnings
-
-    from pyspark.sql import functions as F
 
     from listenbrainz_server_spark.operators.similarity import (
         PROBE_FANOUT_WARN,
@@ -1000,10 +1000,10 @@ def test_probe_fanout_warning(spark):
 
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # any warning -> test failure
-        _probe_sig_array(F.col("sig"), 9, 3)  # fan-out 130: silent
+        _probe_sig_array("`sig`", 9, 3)  # fan-out 130: silent
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        _probe_sig_array(F.col("sig"), 24, 3)  # fan-out 2,325
+        _probe_sig_array("`sig`", 24, 3)  # fan-out 2,325
     msgs = [str(w.message) for w in caught if w.category is RuntimeWarning]
     assert any("ivf" in m.lower() for m in msgs), msgs
     assert PROBE_FANOUT_WARN < 2325

@@ -1,11 +1,11 @@
-"""Interleaved A/B measurement for a set of queries (r15 tooling).
+"""The per-query paired comparator: interleaved A/B of old vs new code.
 
 Cross-run bench seconds on this box drift ±40% between windows, so
 every optimization decision is made on INTERLEAVED evidence: the old
 and new code run as alternating sequential processes inside one
 machine window, and per-query medians are compared old-vs-new.
 
-    python tools/ab_interleave.py <old_ref> <q1,q2,...> [pairs]
+    python tools/ab_interleave.py <old_ref> <q1,q2,...> [pairs] [--tag NAME]
 
 - <old_ref>: a git ref (commit/branch) for the OLD side; a detached
   worktree is created under a private tempdir and removed afterwards.
@@ -16,11 +16,13 @@ Each leg runs `bench.py --only <names> --no-artifact` (median-of-1
 per --all semantics with an untimed warm-up per query, promoting
 >2 s queries to median-of-3 inside the leg). Prints per-query medians
 and the ratio, plus the raw legs for auditability, and writes the
-same JSON to plans/r15/AB_<tag>.json when --tag is given.
+same JSON to plans/r15/AB_<tag>.json when --tag is given (``--tag NAME``
+or ``--tag=NAME``).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -50,14 +52,15 @@ def run_leg(script_dir: str, names: list[str]) -> dict[str, float]:
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--tag")]
-    tag = None
-    for a in sys.argv[1:]:
-        if a.startswith("--tag="):
-            tag = a.split("=", 1)[1]
-    old_ref = args[0]
-    names = args[1].split(",")
-    pairs = int(args[2]) if len(args) > 2 else 3
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("old_ref", help="git ref for the OLD side")
+    ap.add_argument("names", help="comma-separated query names")
+    ap.add_argument("pairs", nargs="?", type=int, default=3,
+                    help="NEW/OLD process pairs to alternate (default 3)")
+    ap.add_argument("--tag", help="also write plans/r15/AB_<tag>.json")
+    args = ap.parse_args()
+    old_ref, names, pairs, tag = (args.old_ref, args.names.split(","),
+                                  args.pairs, args.tag)
 
     wt = os.path.join(tempfile.mkdtemp(prefix="ab_worktree_"), "old")
     r = subprocess.run(

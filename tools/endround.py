@@ -21,10 +21,7 @@ Runs, in order:
      sweep (deferred with a printed notice on --delta). rc-enforced —
      the r13 one-time sweep found 4 scale defects invisible at every
      sf0.01 gate;
-  4. (full pass only) the A-B-A anchor — headline movers >1.3x vs the
-     prior round re-run new→old→new against the prior snapshot in one
-     session → ABA_latest.json (VERDICT r12 #1), and
-  5. (full pass only) tools/recall_smoke.py — auto ANN-dial recall vs
+  4. (full pass only) tools/recall_smoke.py — auto ANN-dial recall vs
      brute force at sf0.1 + sf1, rc-enforced (VERDICT r12 #2).
 
 Then asserts len(artifact) == len(registry) for all three and exits
@@ -525,262 +522,6 @@ def run_sf01_gate(rnd: int, registry, conservative_full: bool = True) -> str | N
     return None
 
 
-def _prior_query_map(prior_bench: str, old_head: str):
-    """Resolve the A-B-A anchor's prior per-query timings.
-
-    BENCH_r{N}.json is the DRIVER's record of bench.py's run: the
-    JSON line lives under "parsed" (with rc/tail wrapper fields);
-    accept both that shape and a plain bench.py output. The driver
-    artifact can also be unparseable (r13: the oversized headline
-    line recorded parsed:null) — without a fallback the anchor
-    silently compared against NOTHING and stamped "no movers", a
-    vacuous adjudication wearing a real one's words (found in r14).
-    Fall back to the prior round's committed full-sweep artifact AT
-    ITS RECORDED HEAD: like-for-like sweep-vs-sweep conditions and
-    all registry names instead of the ~40 headline ones.
-
-    Returns (query_map, label) — label is None when the primary
-    artifact supplied the data, and query_map is {} when neither
-    source has per-query data (caller stamps an explicit
-    "adjudication unavailable" note).
-    """
-    prior_raw = json.load(open(prior_bench))
-    prior_parsed = prior_raw.get("parsed") or prior_raw
-    prior_q = (prior_parsed.get("queries", {})
-               if isinstance(prior_parsed, dict) else {})
-    if prior_q:
-        return prior_q, None
-    r = subprocess.run(
-        ["git", "show", f"{old_head}:BENCH_full_latest.json"],
-        cwd=REPO, capture_output=True, text=True,
-    )
-    if r.returncode == 0:
-        try:
-            fallback_q = json.loads(r.stdout).get("queries", {})
-        except json.JSONDecodeError:
-            fallback_q = {}
-        if fallback_q:
-            return fallback_q, (
-                f"BENCH_full_latest.json@{old_head[:10]} "
-                f"(fallback: {os.path.basename(prior_bench)} has no "
-                "per-query data)")
-    return {}, None
-
-
-def run_aba(rnd: int, threshold: float = 1.3) -> str | None:
-    """Same-session A-B-A anchor for the headline movers (VERDICT r12
-    #1): cross-window headline ratios on this box carry ±40% drift —
-    r12's headline manufactured a 1.20x phantom regression under a
-    "stable" window stamp, disproved only by the judge's hand-run
-    worktree A-B-A. This automates that exact recipe at endround:
-
-    1. movers = the top-10 names whose full-sweep time moved >1.3x vs
-       the prior round's artifact, PLUS every registered name whose
-       defining module changed since the prior round's head (the
-       import-closure stale set — VERDICT r14 #6: sweep-ratio-chosen
-       movers alone left a round's claims resting on 5 adjudications
-       picked by a garbage-window signal). The combined list is
-       ranked (ratio movers by |log ratio|, then touched names by
-       current sweep seconds) and capped at ABA_MAX_MOVERS=20 legs
-       per window; anything dropped by the cap is stamped under
-       "movers_capped" so the omission is legible;
-    2. git-worktree the prior round's engine snapshot (the git_head
-       recorded in CHECK_full_r{N-1}.json);
-    3. run bench.py --only <movers> new → old → new in ONE session
-       (sequential JVMs, no concurrent Spark — the measurement rules);
-    4. stamp each mover ab_confirmed from the MATCHED-condition legs,
-       direction-aware and drift-conservative: an apparent regression
-       is confirmed only if even HEAD's BETTER leg is >=1.15x the old
-       snapshot; an apparent improvement only if even HEAD's WORSE leg
-       is <=1/1.15x.
-
-    Writes ABA_latest.json; bench.py's headline mode attaches it so
-    BENCH_r{N} (the driver-recorded artifact) carries the field.
-    Returns an error string or None.
-    """
-    import math
-    import shutil
-    import time
-
-    out_path = os.path.join(REPO, "ABA_latest.json")
-
-    def _head():
-        r = subprocess.run(["git", "rev-parse", "HEAD"], cwd=REPO,
-                           capture_output=True, text=True)
-        return r.stdout.strip() if r.returncode == 0 else None
-
-    base = {
-        "round": rnd,
-        "git_head": _head(),
-        "generated": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        "threshold": threshold,
-        "confirm_margin": 1.15,
-        "movers": {},
-    }
-    prior_bench = os.path.join(REPO, f"BENCH_r{rnd - 1:02d}.json")
-    prior_check = os.path.join(REPO, f"CHECK_full_r{rnd - 1:02d}.json")
-    if not os.path.exists(prior_bench) or not os.path.exists(prior_check):
-        base["note"] = f"no prior-round artifacts for r{rnd - 1:02d}"
-        json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
-        return None
-    old_head = json.load(open(prior_check)).get("git_head")
-    if not old_head:
-        base["note"] = f"CHECK_full_r{rnd - 1:02d}.json has no git_head"
-        json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
-        return None
-    base["old_head"] = old_head
-    base["prior_artifact"] = os.path.basename(prior_bench)
-
-    prior_q, prior_label = _prior_query_map(prior_bench, old_head)
-    if prior_label:
-        base["prior_artifact"] = prior_label
-    if not prior_q:
-        base["note"] = (
-            f"adjudication unavailable: {os.path.basename(prior_bench)} "
-            f"has no per-query data and no committed sweep artifact at "
-            f"{old_head[:10]}")
-        json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
-        print(f"  aba: {base['note']}")
-        return None
-    # Advisor r13 #3: the sweep step can fail (or be skipped) — a
-    # missing/corrupt BENCH_full_latest.json must degrade to a stamped
-    # note, not an uncaught exception that aborts endround before the
-    # head-stamp and coverage assertions run.
-    bench_path = os.path.join(REPO, "BENCH_full_latest.json")
-    try:
-        cur_q = json.load(open(bench_path)).get("queries", {})
-    except (OSError, json.JSONDecodeError) as e:
-        base["note"] = f"BENCH_full_latest.json unreadable: {e}"
-        json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
-        return f"aba: {base['note']}"
-    # Mover eligibility floor: sub-half-second queries' ratios are
-    # scheduler/JIT noise (a 0.19 s vs 0.25 s "mover" adjudicates
-    # nothing) and they cannot move the headline total materially.
-    ratios = {
-        n: cur_q[n] / p
-        for n, p in prior_q.items()
-        if cur_q.get(n) and p > 0 and max(cur_q[n], p) >= 0.5
-    }
-    ratio_movers = sorted(
-        (n for n, r in ratios.items() if r > threshold or r < 1 / threshold),
-        key=lambda n: abs(math.log(ratios[n])),
-        reverse=True,
-    )[:10]
-    # Round-touched names (VERDICT r14 #6): adjudicate every query the
-    # round's code changes could affect, not just the sweep's ratio
-    # picks — the ratio signal is exactly what a drifted window
-    # poisons. Stale set = import-closure of the diff vs the prior
-    # round's head; ranked by current sweep seconds so the cap keeps
-    # the names whose adjudication moves the most total seconds.
-    registry = load_all()
-    touched = _stale_names(registry, {"git_head": old_head})
-    if touched is None:
-        touched = set()
-        base["touched_unmappable"] = True
-    touched = [n for n in touched if n in cur_q and n not in ratio_movers]
-    touched.sort(key=lambda n: cur_q[n], reverse=True)
-    ABA_MAX_MOVERS = 20
-    movers = (ratio_movers + touched)[:ABA_MAX_MOVERS]
-    dropped = (ratio_movers + touched)[ABA_MAX_MOVERS:]
-    if dropped:
-        base["movers_capped"] = {
-            "cap": ABA_MAX_MOVERS,
-            "n_dropped": len(dropped),
-            "dropped_head": dropped[:10],
-        }
-    if not movers:
-        base["note"] = (
-            f"no headline movers beyond {threshold}x vs prior round "
-            "and no round-touched names in the sweep"
-        )
-        json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
-        print(f"  aba: no movers beyond {threshold}x — nothing to adjudicate")
-        return None
-    print(f"  aba movers ({len(ratio_movers)} ratio + "
-          f"{len(movers) - len(ratio_movers)} touched): {movers}")
-
-    # Advisor r13 #3: a fixed /tmp path can clobber unrelated content
-    # or collide across concurrent runs — take a fresh private dir and
-    # let git create the worktree inside it.
-    import tempfile
-
-    wt = os.path.join(tempfile.mkdtemp(prefix="aba_worktree_"), "snapshot")
-    r = subprocess.run(
-        ["git", "worktree", "add", "--detach", wt, old_head],
-        cwd=REPO, capture_output=True, text=True,
-    )
-    if r.returncode != 0:
-        return f"worktree add {old_head[:10]} failed: {r.stderr.strip()[:200]}"
-
-    def leg(script_dir: str, extra: list[str]) -> dict | str:
-        r = subprocess.run(
-            [sys.executable, os.path.join(script_dir, "bench.py"),
-             "--only", ",".join(movers), *extra],
-            cwd=script_dir, capture_output=True, text=True,
-        )
-        if r.returncode != 0:
-            return f"leg in {script_dir} exited {r.returncode}"
-        for ln in reversed(r.stdout.splitlines()):
-            if ln.startswith("{"):
-                return json.loads(ln).get("queries", {})
-        return f"leg in {script_dir} printed no JSON line"
-
-    try:
-        # new → old → new: bracketing HEAD around the old snapshot so
-        # a mid-A-B-A window shift shows up as new1/new2 disagreement.
-        legs = {}
-        for label, (d, extra) in (
-            ("new1", (REPO, ["--no-artifact"])),
-            ("old", (wt, [])),  # old bench.py has no --no-artifact;
-            #                     its merge stays inside the worktree
-            ("new2", (REPO, ["--no-artifact"])),
-        ):
-            got = leg(d, extra)
-            if isinstance(got, str):
-                return got
-            legs[label] = got
-    finally:
-        subprocess.run(["git", "worktree", "remove", "--force", wt],
-                       cwd=REPO, capture_output=True)
-        shutil.rmtree(os.path.dirname(wt), ignore_errors=True)
-
-    for n in movers:
-        new1, old, new2 = (legs["new1"].get(n), legs["old"].get(n),
-                           legs["new2"].get(n))
-        m = {
-            "prior_round": prior_q.get(n),
-            "this_sweep": cur_q[n],
-            "sweep_ratio": round(ratios[n], 3) if n in ratios else None,
-            "legs": {"new1": new1, "old": old, "new2": new2},
-        }
-        if n not in ratios:
-            m["selected_by"] = "round-touched"
-        if None in (new1, old, new2) or old <= 0:
-            m["ab_confirmed"] = None
-            m["note"] = "leg missing — adjudication unavailable"
-        elif ratios.get(n, 1.0) > 1:  # apparent/possible regression
-            m["matched_ratio"] = round(min(new1, new2) / old, 3)
-            m["ab_confirmed"] = m["matched_ratio"] >= 1.15
-            # A touched name with no sweep signal still gets a
-            # direction: flag whichever matched-condition movement
-            # clears the confirm margin.
-            if n not in ratios and not m["ab_confirmed"]:
-                impr = round(max(new1, new2) / old, 3)
-                if impr <= 1 / 1.15:
-                    m["matched_ratio"] = impr
-                    m["ab_confirmed"] = True
-                    m["direction"] = "improved"
-        else:  # apparent improvement
-            m["matched_ratio"] = round(max(new1, new2) / old, 3)
-            m["ab_confirmed"] = m["matched_ratio"] <= 1 / 1.15
-        base["movers"][n] = m
-    json.dump(base, open(out_path, "w"), indent=1, sort_keys=True)
-    n_conf = sum(1 for m in base["movers"].values() if m["ab_confirmed"])
-    print(f"  aba: {n_conf}/{len(movers)} movers confirmed real "
-          f"(rest are window drift)")
-    return None
-
-
 def assert_head() -> int:
     """Round-closing invariant (VERDICT r9 #1 process fix): refuse to
     conclude a round if HEAD moved past the newest CHECK artifact's
@@ -884,36 +625,7 @@ def main() -> int:
     if err:
         failures.append(f"sf0.1 gate: {err}")
 
-    # VERDICT r11 #2: an unstable probe window (interleaved trace
-    # max/min > 1.6x after the first-point skip — NOT the retired
-    # start/end-pair rule, which reads ~2.1x even on healthy sweeps)
-    # makes the sweep's normalized numbers unadjudicable — re-run the
-    # full bench ONCE when the artifact flags it. If the second window
-    # is also unstable, keep its flag (the artifact self-annotates)
-    # rather than loop; readers then prefer raw like-for-like.
     if not delta:
-        bpath = os.path.join(REPO, "BENCH_full_latest.json")
-        if os.path.exists(bpath):
-            with open(bpath) as f:
-                if json.load(f).get("window_unstable"):
-                    print("== full bench: window_unstable tripped, re-running once")
-                    r = subprocess.run(
-                        [sys.executable, os.path.join(REPO, "bench.py"), "--all"],
-                        cwd=REPO,
-                    )
-                    if r.returncode != 0:
-                        failures.append(f"bench re-run exited {r.returncode}")
-
-    if not delta:
-        # VERDICT r12 #1: adjudicate the headline movers with a
-        # same-session worktree A-B-A, right after the sweep so the
-        # legs share its window. Writes ABA_latest.json; bench.py's
-        # headline mode attaches it to the artifact of record.
-        print("== aba anchor: headline movers vs prior round")
-        err = run_aba(int(rnd))
-        if err:
-            failures.append(f"aba: {err}")
-
         # VERDICT r12 #2: the recall smoke (auto ANN dials vs brute
         # force at sf0.1 + sf1) is a guard only if it RUNS — it exits
         # nonzero below the 0.45 floor / IVFPQ < 0.85x IVF, and
@@ -931,12 +643,10 @@ def main() -> int:
     if not delta and os.path.exists(check_path):
         with open(check_path) as f:
             _c = json.load(f)
-        if "git_head" not in _c:
-            _r = subprocess.run(["git", "rev-parse", "HEAD"], cwd=REPO,
-                                capture_output=True, text=True)
-            if _r.returncode == 0:
-                _c["git_head"] = _r.stdout.strip()
-                json.dump(_c, open(check_path, "w"), indent=1, sort_keys=True)
+        head = _git_head()
+        if "git_head" not in _c and head:
+            _c["git_head"] = head
+            json.dump(_c, open(check_path, "w"), indent=1, sort_keys=True)
 
     # Coverage assertions: every artifact must account for every name.
     with open(check_path) as f:
